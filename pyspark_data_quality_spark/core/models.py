@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from typing import TYPE_CHECKING, Iterable
 
 from pyspark.sql.types import (
     DoubleType,
@@ -28,6 +29,9 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 #: Fixed metric output schema (14 fields, reference ``result_obj.py:15-30``).
 METRIC_SCHEMA = StructType(
@@ -79,7 +83,7 @@ class MetricResult:
     extra_info: dict[str, str] = field(default_factory=dict)
 
     def as_row(self) -> tuple:
-        """Tuple in METRIC_SCHEMA field order (for createDataFrame)."""
+        """Tuple in METRIC_SCHEMA field order (``extra_info`` a dict)."""
         return (
             self.dataset,
             self.run_id,
@@ -100,3 +104,29 @@ class MetricResult:
 
 def _f(v) -> float | None:
     return None if v is None else float(v)
+
+
+def metric_frame(spark: "SparkSession", metrics: Iterable[MetricResult]) -> "DataFrame":
+    """``metrics`` as a METRIC_SCHEMA frame that plans as a LocalRelation.
+
+    The rows go to the JVM as one Arrow table and live in the plan
+    itself. A list of tuples would go through ``parallelize`` plus a
+    Python ``map`` (``RDD._reserialize``): every action on the frame — a
+    monitor join, a history write, a collect — would start Python
+    workers to re-read a few hundred rows. Aware-UTC timestamps
+    (``_utcnow``) become Arrow UTC instants, so the session timezone
+    does not shift them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(METRIC_SCHEMA)
+    rows = [m.as_row() for m in metrics]
+    columns = list(zip(*rows)) if rows else [()] * len(schema)
+    arrays = [
+        pa.array(
+            [list(v.items()) for v in col] if pa.types.is_map(f.type) else col,
+            type=f.type,
+        )
+        for f, col in zip(schema, columns)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=schema), METRIC_SCHEMA)

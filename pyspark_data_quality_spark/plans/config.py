@@ -222,31 +222,32 @@ def run_suite(
             for k in ("lookback", "threshold", "min_periods", "direction")
             if k in mon
         }
-        regressions = monitor_metrics(spark, mon["path"], metrics,
-                                      dataset=ds, **kw)
-        if mon.get("write", True):
-            already = False
-            try:
-                already = (
-                    read_metrics(spark, mon["path"], dataset=ds)
-                    .filter(F.col("run_id") == mgr.run_id)
-                    .limit(1)
-                    .count()
-                    > 0
-                )
-            except AnalysisException as e:
-                if "PATH_NOT_FOUND" not in str(e):
-                    raise
-            if already:
-                import warnings
+        with result.tag_jobs("history"):
+            regressions = monitor_metrics(spark, mon["path"], metrics,
+                                          dataset=ds, **kw)
+            if mon.get("write", True):
+                already = False
+                try:
+                    already = (
+                        read_metrics(spark, mon["path"], dataset=ds)
+                        .filter(F.col("run_id") == mgr.run_id)
+                        .limit(1)
+                        .count()
+                        > 0
+                    )
+                except AnalysisException as e:
+                    if "PATH_NOT_FOUND" not in str(e):
+                        raise
+                if already:
+                    import warnings
 
-                warnings.warn(
-                    f"run_suite: run_id {mgr.run_id!r} already in the "
-                    "metrics history — skipping the append (a retried "
-                    "task must not double-weight its run in future "
-                    "baselines)",
-                    stacklevel=2,
-                )
-            else:
-                write_metrics(metrics, mon["path"])
+                    warnings.warn(
+                        f"run_suite: run_id {mgr.run_id!r} already in the "
+                        "metrics history — skipping the append (a retried "
+                        "task must not double-weight its run in future "
+                        "baselines)",
+                        stacklevel=2,
+                    )
+                else:
+                    write_metrics(metrics, mon["path"])
     return SuiteRun(result, metrics, regressions)

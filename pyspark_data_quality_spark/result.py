@@ -19,14 +19,20 @@ predicate array — Catalyst collapses it with downstream filters and pushes
 scan-level predicates into parquet. Uniqueness row-classification needs
 per-key multiplicities, i.e. one hash-partition shuffle per distinct key
 set (window count); rules that don't need it add zero shuffles.
+:meth:`ResultObj.split` is the one entry point for a run that writes BOTH
+sides: it persists the annotated frame once, so the FK broadcast, the
+uniqueness shuffle and the rule evaluation run once for the two sinks.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .core.models import METRIC_SCHEMA
+from .core.models import metric_frame
 from .operators.base import MARKER_PREFIX, Rule, RunContext
 from .plans.analysis import AnalysisRunner
 
@@ -124,14 +130,59 @@ class ResultObj:
         out = ann.filter(F.size(FAILED_RULES_COL) > 0)
         return out if with_reasons else out.drop(FAILED_RULES_COL)
 
+    @contextmanager
+    def split(self) -> Iterator[tuple[DataFrame, DataFrame]]:
+        """``(valid, invalid)`` from ONE persisted classification, for a
+        run that consumes both sides (two sinks)::
+
+            with result.split() as (valid, invalid):
+                valid.write.parquet(...)
+                invalid.write.parquet(...)
+
+        ``annotated_df()`` is persisted for the block: the first action
+        runs the FK broadcast join, the uniqueness shuffle and the rule
+        evaluation once; the second side filters the cached rows. Valid
+        is ``size(failed_rules) = 0`` with the column dropped (original
+        schema), invalid keeps ``failed_rules``. Both sides read the same
+        cached classification, so a source or reference table that
+        changes between the two actions cannot route a row to both sides
+        or to neither. Unpersisted on exit, also when the block raises."""
+        ann = self.annotated_df().persist()
+        try:
+            yield (
+                ann.filter(F.size(FAILED_RULES_COL) == 0).drop(FAILED_RULES_COL),
+                ann.filter(F.size(FAILED_RULES_COL) > 0),
+            )
+        finally:
+            ann.unpersist()
+
+    @contextmanager
+    def tag_jobs(self, output: str) -> Iterator[None]:
+        """Describe every Spark job started in the block as
+        ``dq:{dataset}:{run_id}:{output}`` (``spark.job.description``, the
+        label the Spark UI and the status store show), restoring the
+        previous description on exit. The job GROUP is left alone: it
+        belongs to the caller (cancellation, tracing)."""
+        sc = self.spark.sparkContext
+        key = "spark.job.description"
+        prev = sc.getLocalProperty(key)
+        sc.setLocalProperty(key, f"dq:{self.ctx.dataset}:{self.ctx.run_id}:{output}")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty(key, prev)
+
     # -- dataset-level outputs -------------------------------------------------
 
     def get_metric_results(self) -> DataFrame:
         """Typed metrics DataFrame (14-field METRIC_SCHEMA): ONE fused agg
-        job for all rules, then a tiny driver-side createDataFrame."""
-        metrics = AnalysisRunner.run(self.df, self.rules, self.ctx)
-        rows = [m.as_row() for m in metrics]
-        return self.spark.createDataFrame(rows, METRIC_SCHEMA)
+        job for all rules; the metric rows then travel to the JVM as one
+        Arrow batch and plan as a ``LocalRelation``
+        (:func:`..core.models.metric_frame`), so later actions on the
+        frame start no Python workers."""
+        with self.tag_jobs("metrics"):
+            metrics = AnalysisRunner.run(self.df, self.rules, self.ctx)
+        return metric_frame(self.spark, metrics)
 
     def get_deduplicated_df(self) -> DataFrame:
         """Reference-style `valid` for uniqueness rules: one survivor per

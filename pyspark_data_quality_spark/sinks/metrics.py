@@ -12,8 +12,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, StructField, StructType
 
+from ..core.models import METRIC_SCHEMA
 from ..operators.anomaly import metrics_regression
+
+#: The history's schema: METRIC_SCHEMA plus the ``run_date`` partition.
+HISTORY_SCHEMA = StructType(
+    METRIC_SCHEMA.fields + [StructField("run_date", DateType(), True)]
+)
 
 
 def write_metrics(metrics: DataFrame, path: str) -> None:
@@ -32,8 +39,12 @@ def read_metrics(
     *,
     dataset: str | None = None,
 ) -> DataFrame:
-    """Load metric history; the dataset filter prunes partitions."""
-    df = spark.read.parquet(path)
+    """Load metric history; the dataset filter prunes partitions.
+
+    The schema is pinned (:data:`HISTORY_SCHEMA`), so opening the history
+    starts no schema-inference job and a numeric-looking dataset name
+    stays a string. A missing ``path`` still raises ``PATH_NOT_FOUND``."""
+    df = spark.read.schema(HISTORY_SCHEMA).parquet(path)
     if dataset is not None:
         df = df.filter(F.col("dataset") == dataset)
     return df

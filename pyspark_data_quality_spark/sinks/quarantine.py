@@ -3,9 +3,10 @@ rows (with their failure reasons) to a quarantine area.
 
 The standard production pattern the reference never closed the loop on:
 its ResultObj exposed the two frames but nothing persisted them. Both
-writes share the same upstream plan; the source is persisted for the
-duration of the two writes, so each sink's complementary filter reads
-the cached batch — one source pass, no UDFs.
+writes come from ONE classification (:meth:`..result.ResultObj.split`):
+the annotated frame is persisted for the two writes, so the source scan,
+the FK reference scan and broadcast, the uniqueness shuffle and the rule
+evaluation run once, and each sink filters the cached rows — no UDFs.
 
 Layout: ``<base>/valid/`` (original schema) and ``<base>/invalid/``
 (original schema + ``failed_rules array<string>``), both parquet so the
@@ -33,23 +34,13 @@ def quarantine_route(
         "valid": f"{base_path.rstrip('/')}/valid",
         "invalid": f"{base_path.rstrip('/')}/invalid",
     }
-    # persist the source for the duration of the two write actions: the
-    # valid/invalid accessors each build a fresh plan, so an unpersisted
-    # source would be scanned and rule-evaluated once PER SINK — and a
-    # source that changes between the actions (files landing in the
-    # input path) could route a row into both sides or neither
-    result.df.persist()
-    try:
-        for name, df in (
-            ("valid", result.get_valid_df()),
-            ("invalid", result.get_invalid_df(with_reasons=True)),
-        ):
+    with result.split() as (valid, invalid):
+        for name, df in (("valid", valid), ("invalid", invalid)):
             w = df.write.mode(mode)
             if partition_by:
                 w = w.partitionBy(*partition_by)
-            w.parquet(paths[name])
-    finally:
-        result.df.unpersist()
+            with result.tag_jobs(name):
+                w.parquet(paths[name])
     return paths
 
 

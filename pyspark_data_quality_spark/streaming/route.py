@@ -7,9 +7,10 @@ Closes the streaming loop on the batch sink (sinks/quarantine.py): a
 one rule definition and one classification plan — the batch path is the
 offline rehearsal of the stream. ``foreachBatch`` (rather than two
 filtered ``writeStream`` sinks) because Structured Streaming would
-otherwise run the source once PER SINK; here the micro-batch is
-persisted for the duration of the two writes, so both classification
-plans read the cached batch instead of re-running the source.
+otherwise run the source once PER SINK; here each micro-batch is
+classified ONCE (:meth:`..result.ResultObj.split` persists the annotated
+batch for the two writes), so both sinks read the cached classification
+instead of re-running the source and the rules.
 
 Exactly-once caveat (documented, standard): ``foreachBatch`` gives
 at-least-once file writes on retry; downstream readers of the quarantine
@@ -49,27 +50,17 @@ def stream_quarantine_route(
     base = base_path.rstrip("/")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # persist: the result accessors each build a fresh plan over the
-        # micro-batch source, so without this the source is re-read and
-        # the rules re-evaluated once PER SINK — exactly the double-run
-        # the docstring promises foreachBatch avoids (Spark's documented
-        # multi-sink foreachBatch pattern)
-        batch_df.persist()
-        try:
-            mgr = DQManager(spark, dataset=dataset, run_id=str(batch_id))
-            mgr.set_data(batch_df)
-            for r in rules:
-                mgr.add_rule(r)
-            res = mgr.run()
-            res.get_valid_df().withColumn(
-                batch_id_col, F.lit(batch_id)
-            ).write.mode("append").parquet(f"{base}/valid")
-            res.get_invalid_df(with_reasons=True).withColumn(
-                batch_id_col, F.lit(batch_id)
-            ).write.mode("append").parquet(f"{base}/invalid")
-        finally:
-            batch_df.unpersist()
+        mgr = DQManager(batch_df.sparkSession, dataset=dataset, run_id=str(batch_id))
+        mgr.set_data(batch_df)
+        for r in rules:
+            mgr.add_rule(r)
+        res = mgr.run()
+        with res.split() as (valid, invalid):
+            for name, df in (("valid", valid), ("invalid", invalid)):
+                with res.tag_jobs(name):
+                    df.withColumn(batch_id_col, F.lit(batch_id)).write.mode(
+                        "append"
+                    ).parquet(f"{base}/{name}")
 
     writer = stream.writeStream.foreachBatch(write_batch).option(
         "checkpointLocation", checkpoint_path

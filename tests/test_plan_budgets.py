@@ -209,3 +209,72 @@ def test_kernel_not_duplicated_around_pushed_filters(spark, docs):
     )
     arrow_nodes = set(re.findall(r"\((\d+)\) ArrowEvalPython", plan))
     assert len(arrow_nodes) == 1, plan
+
+
+def _executed_nodes(spark, after_execution: int):
+    """``(node name, description, {metric: value})`` for every plan node
+    of the SQL executions with id > ``after_execution``, with the values
+    that execution recorded — a node absent from the work (a cached
+    subtree served by InMemoryTableScan) records none or zero."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    for i in range(execs.length()):
+        eid = execs.apply(i).executionId()
+        if eid <= after_execution:
+            continue
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for j in range(nodes.length()):
+            node = nodes.apply(j)
+            metrics = {}
+            ms = node.metrics()
+            for k in range(ms.length()):
+                opt = values.get(ms.apply(k).accumulatorId())
+                if opt.isDefined():
+                    metrics[ms.apply(k).name()] = opt.get()
+            yield node.name(), node.desc(), metrics
+
+
+def _last_execution(spark) -> int:
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(i).executionId() for i in range(execs.length())), default=-1)
+
+
+def _count(metrics: dict, name: str) -> int:
+    return int(metrics.get(name, "0").replace(",", ""))
+
+
+def test_quarantine_route_classifies_once(spark, sf_dir, orders, tmp_path):
+    """quarantine_route writes both sides from ONE classification: over
+    an FK + uniqueness suite the reference file is scanned once and the
+    uniqueness window shuffle runs once, not once per sink."""
+    from pyspark_data_quality_spark import DQManager
+    from pyspark_data_quality_spark.plans.config import rules_from_config
+    from pyspark_data_quality_spark.sinks import quarantine_route
+
+    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    rules = rules_from_config(
+        [
+            {"type": "fk", "columns": ["l_orderkey"], "ref_table": "orders",
+             "ref_columns": ["o_orderkey"]},
+            {"type": "unique", "columns": ["l_orderkey", "l_linenumber"]},
+            {"type": "range", "column": "l_discount", "max_value": 0.05},
+        ],
+        tables={"orders": orders},
+    )
+    mgr = DQManager(spark, dataset="lineitem", run_id="budget").set_data(lineitem)
+    for rule in rules:
+        mgr.add_rule(rule)
+    first = _last_execution(spark)
+    quarantine_route(mgr.run(), str(tmp_path / "q"))
+
+    ref_scans = unique_shuffles = 0
+    for name, desc, metrics in _executed_nodes(spark, first):
+        if name.startswith("Scan parquet") and "orders.parquet" in desc:
+            ref_scans += _count(metrics, "number of output rows") > 0
+        if (name == "Exchange" and "hashpartitioning(l_orderkey" in desc
+                and "l_linenumber" in desc):
+            unique_shuffles += _count(metrics, "shuffle records written") > 0
+    assert ref_scans == 1
+    assert unique_shuffles == 1

@@ -429,6 +429,7 @@ def test_windowed_cardinality_batch_exact_and_stream_hll(spark, events_dir):
 
 
 def test_stream_quarantine_route(spark, tmp_path):
+    from pyspark_data_quality_spark import DQManager
     from pyspark_data_quality_spark.operators import (
         CompletenessColRatioRule,
         RangeRule,
@@ -445,12 +446,15 @@ def test_stream_quarantine_route(spark, tmp_path):
         RangeRule(column="amount", min_value=0.0),
     ]
     base = str(tmp_path / "routed")
+    cached_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     q = stream_quarantine_route(
         stream, rules, base,
         checkpoint_path=str(tmp_path / "ckpt"),
         trigger_available_now=True,
     )
     q.awaitTermination(120)
+    # the per-batch classification is released once both sinks are written
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == cached_before
 
     valid = spark.read.parquet(f"{base}/valid")
     invalid = spark.read.parquet(f"{base}/invalid")
@@ -459,6 +463,18 @@ def test_stream_quarantine_route(spark, tmp_path):
     assert set(bad) == {2, 3}
     assert any("range" in x for x in bad[2])
     assert all(r["_batch_id"] == 0 for r in invalid.collect())
+    # valid ∪ invalid = the input, disjoint, with the batch path's reasons
+    routed = [(r["id"], r["amount"]) for r in valid.collect()] + [
+        (r["id"], r["amount"]) for r in invalid.collect()
+    ]
+    assert sorted(routed, key=str) == sorted(rows, key=str)
+    mgr = DQManager(spark).set_data(spark.read.parquet(src_path))
+    for r in rules:
+        mgr.add_rule(r)
+    assert bad == {
+        r["id"]: set(r["failed_rules"])
+        for r in mgr.run().get_invalid_df().collect()
+    }
 
     # batch frames are rejected with a pointer to the batch sink
     with pytest.raises(ValueError, match="batch frame"):
